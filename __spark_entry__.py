@@ -2591,9 +2591,9 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ``documents`` (old = doc_id%5!=0, new = doc_id%7!=0 with every
     3rd doc's content mutated) FULL-OUTER-joined on the key and classified
     added/removed/changed/unchanged (operators/diff.py). At 100 TB both
-    snapshots live bucketed on the key (write_bucketed), so this join is
-    storage-partitioned and zero-exchange — the classification itself
-    never shuffles."""
+    snapshots live under an Iceberg ``bucket(N, key)`` partition spec, so
+    this join is storage-partitioned and zero-exchange — the
+    classification itself never shuffles."""
     from bodhium_webscrapper_spark.operators.diff import snapshot_diff
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")

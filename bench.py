@@ -15,9 +15,15 @@ Prints ONE JSON line:
    "stage_scaling": {...}}
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_PAGES (default 8000000),
+SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_PAGES (default 16000000),
 SPARK_GRAFT_BENCH_REPS (default 2), SPARK_GRAFT_BENCH_N (default 4),
-SPARK_GRAFT_SKIP_SCALING=1 to skip the two-level frontier run.
+SPARK_GRAFT_SKIP_SCALING=1 to skip the two-level frontier run,
+SPARK_GRAFT_SKIP_GIANT=1 to skip its giant-wave configuration
+(SPARK_GRAFT_GIANT_{BUDGET,WAVES,REPS} size it), and
+SPARK_GRAFT_EVENTLOG_DIR to write the Spark event log of each pinned run.
+
+The defaults are sized for a 32-core host. The repository's benchmark
+(BENCHMARK.json) is ``python3 perfbench/run.py --workload <name> --seed N``.
 """
 
 from __future__ import annotations
@@ -68,9 +74,6 @@ def _stop(spark):
     PythonAccumulatorV2.merge stack trace into the bench output."""
     time.sleep(2.0)
     spark.stop()
-
-
-FETCH_BUCKETS = 64
 
 
 def _steal_ticks() -> int:
@@ -173,13 +176,6 @@ def membw_probe(lo: int = 4, hi: int = 16, mb: int = 64, reps: int = 40) -> dict
     }
 
 
-def _giant_fetch() -> str:
-    """Fetch strategy of the giant-wave configuration: bucketed by default
-    (the measured-faster zero-broadcast path at 10^7-row waves,
-    BENCH/BASELINE.md §2.4); override with SPARK_GRAFT_GIANT_FETCH."""
-    return os.environ.get("SPARK_GRAFT_GIANT_FETCH", "bucketed")
-
-
 def _fixture(n_pages: int):
     from bodhium_webscrapper_spark.session import build_session
     from bodhium_webscrapper_spark.sources.datagen import (
@@ -193,28 +189,7 @@ def _fixture(n_pages: int):
         spark = build_session("local[32]", "bench_prep", 32)
         prepare_pages(spark, paths["pages_raw"], os.path.join(out, "pages"), n_files=64)
         _stop(spark)
-    fixture = {**paths, "pages": os.path.join(out, "pages")}
-    # one-time bucketed pages layout (amortized corpus rewrite, built
-    # unpinned at full width — prep, not measurement; every pinned run
-    # re-attaches it metadata-only via register_bucketed)
-    bkt = os.path.join(out, f"pages_bkt{FETCH_BUCKETS}")
-    needs_bkt = (
-        os.environ.get("SPARK_GRAFT_BENCH_FETCH") == "bucketed"
-        or (_giant_fetch() == "bucketed"
-            and os.environ.get("SPARK_GRAFT_SKIP_GIANT") != "1")
-    )
-    if needs_bkt and not os.path.exists(os.path.join(bkt, "_SUCCESS")):
-        from pyspark.sql import functions as F
-
-        from bodhium_webscrapper_spark.plans.bucketed_fetch import write_bucketed
-
-        spark = build_session("local[32]", "bench_bkt_prep", 32)
-        pages = spark.read.parquet(fixture["pages"]).select("url_hash", "url", "html")
-        write_bucketed(pages, "bench_pages_bkt_prep", FETCH_BUCKETS, bkt)
-        spark.sql("DROP TABLE IF EXISTS bench_pages_bkt_prep")
-        _stop(spark)
-    fixture["pages_bkt"] = bkt
-    return fixture
+    return {**paths, "pages": os.path.join(out, "pages")}
 
 
 def run_frontier(
@@ -302,20 +277,6 @@ def _run_frontier_inproc(master: str, fixture: dict, tag: str) -> dict:
         # filtered below), so the seeds wave skips the A1 dedup window —
         # the full-recrawl schedule stage's dominant exchange+sort
         seeds_distinct=os.environ.get("SPARK_GRAFT_BENCH_SEED_ALL") == "1",
-        # bucketed = the zero-broadcast storage-partitioned fetch: the wave
-        # table is written bucketBy(url_hash) and streams bucket-vs-bucket
-        # against the pre-bucketed pages layout — no driver-serial
-        # broadcast build, the giant-wave default (see _giant_fetch)
-        fetch_strategy=os.environ.get("SPARK_GRAFT_BENCH_FETCH", "broadcast"),
-        # SPARK_GRAFT_BENCH_SCHED_AQE=0 runs the schedule action under
-        # static planning (CrawlConfig.schedule_aqe) — an experiment knob;
-        # the recorded pairs keep AQE on (the only clean A/B so far read
-        # neutral, and historical records were captured with AQE).
-        schedule_aqe=os.environ.get("SPARK_GRAFT_BENCH_SCHED_AQE", "1") == "1",
-        fetch_buckets=FETCH_BUCKETS,
-        bucketed_pages_path=os.path.join(
-            os.path.dirname(fixture["pages"]), f"pages_bkt{FETCH_BUCKETS}"
-        ),
     )
     # SEED_ALL: seed the full URL dump instead of the host roots — the
     # full-recrawl configuration. One wave then schedules+fetches+extracts
@@ -369,24 +330,11 @@ def _run_frontier_inproc(master: str, fixture: dict, tag: str) -> dict:
     #   the old limit(500) warmup spawned ONE worker, so wave 0 measured
     #   the other N-1 worker forks + imports)
     # - materializes the persisted politeness artifacts (rules/budgets)
-    pages_src = (
-        spark.table(job._pages_table)  # warm the files the fetch will read
-        if cfg.fetch_strategy == "bucketed"
-        else spark.read.parquet(fixture["pages"]).select("url_hash", "url", "html")
-    )
-    pages_src.filter(
+    spark.read.parquet(fixture["pages"]).select("url_hash", "url", "html").filter(
         F.col("url_hash") % 101 == 0
     ).select(job._extract_udf(F.col("html"), F.col("url")).alias("p")).select(
         F.sum(F.length("p.text"))
     ).first()
-    if os.environ.get("SPARK_GRAFT_BENCH_SEED_ALL") == "1":
-        # SEED_ALL's schedule stage scans the RAW pages url column (the
-        # seed dump); with the bucketed fetch the main warmup above reads
-        # only the bucketed layout, so warm the raw url column too — cold
-        # single-disk reads are not an engine property (see warmup note)
-        spark.read.parquet(fixture["pages"]).select("url").select(
-            F.count("url")
-        ).first()
     if job._budgets is not None:
         job._budgets.count()
     t0 = time.time()
@@ -572,216 +520,6 @@ def run_queries(sf_dir: str, cpus: int) -> dict:
     return out
 
 
-def best_clean_window_record() -> dict:
-    """Best RECORDED giant-pair scaling measurement from the window-hunt
-    log (BENCH/window_hunt.jsonl, committed; benchmarks/clean_window_run.py
-    appends it). This run's own window may be arbitrarily dirty — the
-    hypervisor parity probes prove it either way — so the headline artifact
-    always carries the best measurement whose bracketing probe was clean
-    (parity >= 0.93), alongside this window's raw numbers."""
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH", "window_hunt.jsonl"
-    )
-    best = {}
-    best_sw = {}
-    best_pair = {}
-    best_pair_score = {}
-    best_q = {}
-    try:
-        with open(path) as f:
-            for line in f:
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                # six-wave hunt records (benchmarks/sixwave_hunt.py): gated
-                # by a SAME-WINDOW control pair before AND after — clean iff
-                # the before-control was in-family and the after-control
-                # still >= 0.9 (the pair wasn't invaded mid-run)
-                sw = rec.get("sixwave")
-                if rec.get("kind") == "sixwave_hunt" and sw:
-                    c0 = (rec.get("control") or {}).get("eff", 0.0)
-                    c1 = (rec.get("control_after") or {}).get("eff", 0.0)
-                    # both controls two-sided: a super-linear reading on
-                    # EITHER side means a leg was invaded (inflated pair)
-                    if 0.93 <= c0 <= 1.08 and 0.9 <= c1 <= 1.08:
-                        if (
-                            not best_sw
-                            or sw["steady_state_eff"] > best_sw["steady_state_eff"]
-                        ):
-                            best_sw = {
-                                "ts": rec.get("ts"),
-                                "eff": sw["eff"],
-                                "steady_state_eff": sw["steady_state_eff"],
-                                "control_before": c0,
-                                "control_after": c1,
-                            }
-                    continue
-                # arbitrary-core-pair records (benchmarks/pair_scaling.py —
-                # the bus-saturation complement: same job, same 1:4 ratio,
-                # high level below the host's memory-bus saturation point).
-                # Two-sided controls before AND after the pair, gated
-                # against the control's OWN idle-host band at that pair:
-                # the dedup-shuffle control does not read ~1.0 at every
-                # pair — at 2→8 an IDLE host reads 0.617–0.841 across 7
-                # reps (BENCH/pair_calibration_2_8.log, 2026-08-18;
-                # pure-CPU 2-vs-8 parity 0.91–0.935 once truly idle — the
-                # host's own low-N frequency/steal behavior, no memory
-                # traffic involved).
-                # A reading inside the idle band means "window normal";
-                # outside it (either direction) means the window is
-                # anomalous. The run's two SECTIONS (six-wave, then giant)
-                # are separated by ~30 min and the round-5 runs caught the
-                # window flipping BETWEEN them (dirty six-wave + 0.957
-                # tight-rep giant in one run), so each section gates on
-                # its ADJACENT control — before-control for the six-wave
-                # phase, after-control for the giant phase — plus its own
-                # ABBA rep-consistency (spread ≤ 0.12). Rep consistency is
-                # the second side of each section's bracket: load can only
-                # inflate eff by slowing lo legs while hi legs run clean,
-                # which splits the interleaved per-rep efficiencies apart.
-                # Host-parity probes are recorded for context; they gate
-                # nothing unless taken at the PAIR's own core counts (the
-                # round-5 4v16 probes read 0.707 in the same minutes the
-                # 2→8 control read 0.703 in-band — thread-count regimes
-                # decouple, 16 threads hits frequency/saturation behavior
-                # 8 threads never sees).
-                if rec.get("kind") == "pair_scaling":
-                    c0 = (rec.get("control") or {}).get("eff", 0.0)
-                    c1 = (rec.get("control_after") or {}).get("eff", 0.0)
-                    band = {(4, 16): (0.93, 1.08), (2, 8): (0.58, 0.90)}.get(
-                        tuple(rec.get("pair", [])), (0.93, 1.08)
-                    )
-                    sw = rec.get("sixwave") or {}
-                    g = rec.get("giant") or {}
-
-                    def _sec_ok(sec, ctl):
-                        if not sec or not (band[0] <= ctl <= band[1]):
-                            return False
-                        # ABBA reps are REQUIRED: without ≥2 interleaved
-                        # reps a section has only a one-sided control
-                        reps = sec.get("rep_effs", [])
-                        return len(reps) >= 2 and max(reps) - min(reps) <= 0.12
-
-                    sw_ok, g_ok = _sec_ok(sw, c0), _sec_ok(g, c1)
-                    if not (sw_ok or g_ok):
-                        continue
-                    lo_n, hi_n = rec.get("pair", [0, 0])
-                    entry = {
-                        "ts": rec.get("ts"),
-                        "pair": rec.get("pair"),
-                        "control_before": c0,
-                        "control_after": c1,
-                        "host_parity": [
-                            (rec.get("host_before") or {}).get("parity"),
-                            (rec.get("host_after") or {}).get("parity"),
-                        ],
-                    }
-                    if sw_ok:
-                        entry["sixwave_eff"] = sw["eff"]
-                        entry["sixwave_steady_state_eff"] = sw[
-                            "steady_state_eff"
-                        ]
-                        entry["sixwave_hi_urls_per_sec"] = sw[
-                            f"local[{hi_n}]"
-                        ]["urls_per_sec"]
-                        if sw.get("rep_effs"):
-                            entry["sixwave_rep_effs"] = sw["rep_effs"]
-                    if g_ok:
-                        entry["giant_eff"] = g["eff"]
-                        entry["giant_hi_urls_per_sec"] = g[f"local[{hi_n}]"][
-                            "urls_per_sec"
-                        ]
-                        if g.get("rep_effs"):
-                            entry["giant_rep_effs"] = g["rep_effs"]
-                    # best per SECTION across records — the window can be
-                    # clean for one section of one record and the other
-                    # section of another
-                    for sec_key, ok in (("sixwave", sw_ok), ("giant", g_ok)):
-                        if not ok:
-                            continue
-                        score = entry.get(
-                            "giant_eff" if sec_key == "giant"
-                            else "sixwave_steady_state_eff", 0.0)
-                        if score > best_pair_score.get(sec_key, 0.0):
-                            best_pair_score[sec_key] = score
-                            best_pair[sec_key] = {
-                                k: v for k, v in entry.items()
-                                if not k.startswith(
-                                    "giant" if sec_key == "sixwave"
-                                    else "sixwave")
-                            }
-                    continue
-                # curation-operator ABBA records
-                # (benchmarks/quality_scaling_run.py): gated by the
-                # bracketing pure-CPU host-parity probes at the pair's own
-                # core counts (the runner's artifact gate, >=0.90) plus
-                # per-op ABBA rep consistency; dedup-shuffle control rows
-                # ride along as the shuffle-ceiling comparison.
-                if rec.get("kind") == "quality_scaling":
-                    probes = [rec.get("probe_before") or {},
-                              rec.get("probe_after") or {}]
-                    if min(p.get("parity", 0.0) for p in probes) < 0.90:
-                        continue
-                    for op, v in (rec.get("ops") or {}).items():
-                        reps = v.get("rep_effs", [])
-                        if len(reps) >= 2 and max(reps) - min(reps) > 0.12:
-                            continue
-                        cur = best_q.get(op)
-                        if not cur or v["eff"] > cur["eff"]:
-                            best_q[op] = {
-                                "ts": rec.get("ts"),
-                                "pair": rec.get("pair"),
-                                "eff": v["eff"],
-                                "rep_effs": reps,
-                                "amplify": v.get("amplify", rec.get("amplify")),
-                                "control_effs": [
-                                    (rec.get("control_before") or {}).get("eff"),
-                                    (rec.get("control_after") or {}).get("eff"),
-                                ],
-                            }
-                    continue
-                giant = rec.get("giant")
-                if not giant:
-                    continue
-                probes = [rec.get("host_before") or {}, rec.get("host_after") or {}]
-                clean = max(p.get("parity", 0.0) for p in probes)
-                if clean < 0.93:
-                    continue
-                # ABBA rep consistency, same rule as the pair_scaling
-                # branch: a window that collapses mid-pair splits the
-                # interleaved rep efficiencies apart (e.g. the
-                # 2026-08-19T21:20 record: reps 0.93/0.467 with the
-                # after-parity at 0.722 — a one-sided-parity record whose
-                # clean rep rode a bus-disturbed local[4] leg). Records
-                # predating rep capture pass on their probes alone.
-                reps = giant.get("rep_effs") or []
-                if len(reps) >= 2 and max(reps) - min(reps) > 0.12:
-                    continue
-                if not best or giant["eff"] > best["giant_eff"]:
-                    best = {
-                        "ts": rec.get("ts"),
-                        "giant_eff": giant["eff"],
-                        "local[4]_sec": giant["local[4]"]["seconds"],
-                        "local[16]_sec": giant["local[16]"]["seconds"],
-                        "local[16]_urls_per_sec": giant["local[16]"]["urls_per_sec"],
-                        "clean_probe_parity": clean,
-                        "sixwave_eff": (rec.get("sixwave") or {}).get("eff"),
-                        "sixwave_steady_state_eff": (rec.get("sixwave") or {}).get(
-                            "steady_state_eff"
-                        ),
-                    }
-    except OSError:
-        pass
-    if best_sw:
-        best["sixwave_hunt_best"] = best_sw
-    if best_pair:
-        best["pair_scaling_best"] = best_pair
-    if best_q:
-        best["curation_ops_best"] = best_q
-    return best
-
-
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -862,7 +600,6 @@ def main():
                     "SPARK_GRAFT_GIANT_WAVES", "1"
                 ),
                 "SPARK_GRAFT_BENCH_SEED_ALL": "1",
-                "SPARK_GRAFT_BENCH_FETCH": _giant_fetch(),
             }
             g_reps = int(os.environ.get("SPARK_GRAFT_GIANT_REPS", "2"))
             glo_runs = [
@@ -894,7 +631,6 @@ def main():
             biggest = max(gcurve, key=lambda w: w["scheduled"])
             frontier["giant_wave"] = {
                 "budget": int(genv["SPARK_GRAFT_BENCH_BUDGET"]),
-                "fetch": genv["SPARK_GRAFT_BENCH_FETCH"],
                 f"local[{n_lo}]": glo,
                 f"local[{n_hi}]": ghi,
                 "full_loop_efficiency": round(
@@ -930,7 +666,6 @@ def main():
     result["frontier"] = frontier
     result["stage_scaling"] = stage_scaling
     result["compaction"] = compaction
-    result["recorded_clean_window"] = best_clean_window_record()
 
     # FULL results go to a file; stdout gets ONE compact line. The round-3
     # artifact lost its per-query walls because the full line (16M-page
@@ -972,7 +707,6 @@ def main():
             g = frontier["giant_wave"]
             compact["frontier"]["giant_wave"] = {
                 "budget": g["budget"],
-                "fetch": g.get("fetch"),
                 lo_k: {k: g[lo_k][k] for k in ("seconds", "urls_per_sec", "waves")},
                 hi_k: {k: g[hi_k][k] for k in ("seconds", "urls_per_sec", "waves")},
                 "full_loop_efficiency": g["full_loop_efficiency"],
@@ -987,8 +721,6 @@ def main():
         compact["stage_efficiency"] = stage_scaling.get("efficiency")
     if compaction:
         compact["compaction_identical"] = compaction.get("outputs_identical")
-    if result["recorded_clean_window"]:
-        compact["recorded_clean_window"] = result["recorded_clean_window"]
     print(json.dumps(compact))
 
 

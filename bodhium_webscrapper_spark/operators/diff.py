@@ -7,10 +7,10 @@ primitive a recurring 100 TB pipeline needs — it bounds re-fetch work to
 the changed frontier instead of re-processing the whole corpus.
 
 Shape: one FULL OUTER equi-join between the two snapshots on the URL key,
-comparing content hashes. At scale both snapshots should be stored
-bucketed on the join key (plans/bucketed_fetch.write_bucketed — the same
-layout the fetch path amortizes), making the diff a zero-exchange
-storage-partitioned join: each task streams two co-located sorted buckets.
+comparing content hashes. At scale both snapshots should be stored under
+an Iceberg partition spec of ``bucket(N, key)`` on the join key, making
+the diff a zero-exchange storage-partitioned join: each task streams two
+co-located buckets.
 Nothing else shuffles: the classification is a projection.
 """
 

@@ -95,28 +95,6 @@ class SnapshotStore:
         self._schemas[name] = df.schema
         return path
 
-    def write_bucketed(
-        self, wave: int, name: str, df: DataFrame, table: str, n_buckets: int,
-        key: str = "url_hash",
-    ) -> str:
-        """Write a wave artifact as a bucketed, bucket-sorted TABLE whose
-        files live in the artifact's wave directory — so every plain-parquet
-        consumer of the artifact (``read``/``row_count``/``read_columns``/
-        ``read_deltas``: bucket files ARE plain parquet) is unchanged, while
-        ``spark.table(table)`` sees the bucket spec and the fetch join plans
-        exchange-free (plans/bucketed_fetch.py). Stores whose ``wave_dir``
-        is not a filesystem path implement this as their native clustered
-        write (Iceberg: ``partitionedBy(bucket(N, key))``); CrawlJob feature-
-        detects the method and refuses the bucketed strategy without it."""
-        from bodhium_webscrapper_spark.plans.bucketed_fetch import write_bucketed
-
-        path = self.wave_dir(wave, name)
-        if os.path.exists(path):
-            shutil.rmtree(path)  # idempotent re-commit after a crash
-        write_bucketed(df, table, n_buckets, path=path, key=key)
-        self._schemas[name] = df.schema
-        return path
-
     def _reader(self, spark: SparkSession, name: str):
         schema = self._schemas.get(name)
         if schema is None and name in self._arrow_schemas:

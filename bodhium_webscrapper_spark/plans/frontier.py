@@ -8,10 +8,8 @@ empty-checks (mirroring the reference's source-fallback control flow).
 
 Wave t (every stage a DataFrame; schema of frontier rows:
 url_hash, canonical_url, host, depth, priority, retry_count) runs exactly
-TWO Spark jobs — the two artifact writes (the bucketed fetch strategy adds
-a third, narrow one: the numeric-only wave-table write); counts/metrics
-come free from parquet footers and the next frontier is DERIVED, not
-materialized:
+TWO Spark jobs — the two artifact writes; counts/metrics come free from
+parquet footers and the next frontier is DERIVED, not materialized:
 
   frontier_t = explode(page_results_{t-1}.outlinks) ∪ pending misses
                (lazy plan over committed artifacts; wave 0: seeds)
@@ -21,11 +19,10 @@ materialized:
   scheduled  = per-host top-budget window, host-hash salted        [W1/W3]
                → global wave cap, ordered (priority desc, url_hash)[W2]
                → WRITE (job 1)
-  fetched    = pages ⋈ scheduled (default: broadcast-hash — normal
-               waves carry the numeric attrs in the broadcast, ONE
-               join; giant waves keys-only semi-join + attrs shuffle.
-               fetch_strategy="bucketed": zero-broadcast zero-exchange
-               storage-partitioned join of same-bucketed tables)    [J1/S4]
+  fetched    = pages ⋈ scheduled, chosen by the wave's footer row
+               count: up to broadcast_wave_threshold the numeric attrs
+               ride in the broadcast (ONE join); above it a keys-only
+               semi-join + attrs shuffle                            [J1/S4]
   extracted  = ONE fused pandas-UDF pass: text + canonicalized
                same-host outlinks from a single Arrow transfer     [U1/U2/P4/P7]
                → WRITE page_results (job 2)
@@ -52,7 +49,6 @@ Scale notes (100 TB / 10^10 URLs):
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 
@@ -151,20 +147,6 @@ class CrawlConfig:
     # (compressed) footprint; 256 MB compressed ≲ ~1-1.5 GB in memory.
     pending_driver_max_bytes: int = 256 * 1024 * 1024
     salt_activation_threshold: int = 2_000_000  # salt only when frontier is huge
-    # run the SCHEDULE action with adaptive execution disabled. AQE
-    # materializes every exchange of the schedule plan as its own job —
-    # measured (benchmarks/parse_eventlog.py on the 16M-page six-wave):
-    # 6-16 jobs per schedule with a ~2.5 s/wave SERIAL tail of
-    # sub-100ms-compute stage-materialization barriers, pure driver
-    # latency that does not shrink with cores. The giant-scale
-    # configuration turns AQE off for this one action: the plan's physical
-    # choices are already made statically (broadcast hints on the
-    # politeness count-split, explicit salting, size-gated robots
-    # strategy, seen anti-join forced to shuffle at 10^10 keys), so AQE
-    # has nothing left to decide there. Default ON (True = keep AQE):
-    # small/medium crawls DO want the anti-join broadcast-converted when
-    # seen is still tiny, and skew-join coverage for un-salted configs.
-    schedule_aqe: bool = True
     same_host_only: bool = True  # app.py:497 exclude_external_links
     # what "same site" means when same_host_only is on (P4):
     #  "host" = exact host equality (default);
@@ -192,20 +174,6 @@ class CrawlConfig:
     # Default OFF: arbitrary seed lists may contain duplicates, and the
     # contract is trusted, not checked (checking would re-pay the shuffle).
     seeds_distinct: bool = False
-    # fetch physical strategy:
-    #  "broadcast" (default) — the adaptive fused-broadcast / keys-only
-    #    semi-join fetch below; right whenever the wave fits a broadcast.
-    #  "bucketed" — zero-broadcast storage-partitioned fetch
-    #    (plans/bucketed_fetch.py): pages are rewritten ONCE into a
-    #    bucket(url_hash) layout (amortized across every wave; on Iceberg
-    #    it is just the table's partition spec) and each wave's scheduled
-    #    set is written bucketBy the same spec, so the fetch join plans
-    #    with no broadcast, no exchange, and no sort — the 10^8-row-wave
-    #    path, where the broadcast build's driver-serial ~0.7 s/M keys
-    #    (benchmarks/probe_fetch_serial.py) is the loop's residual
-    #    fixed cost. Requires a store with a ``write_bucketed`` seam.
-    fetch_strategy: str = "broadcast"
-    fetch_buckets: int = 64
     # link-authority prioritization: every N committed waves, recompute
     # fixed-point integer PageRank over the FULL committed link graph and
     # add rank_priority_weight * rank/10^6 to each frontier row's priority
@@ -218,10 +186,6 @@ class CrawlConfig:
     rank_priority_every: int = 0
     rank_priority_weight: float = 1.0
     rank_iterations: int = 2
-    # existing bucketed pages layout to re-attach (register_bucketed);
-    # default: written at job init under <checkpoint_dir>/_bucketed_pages
-    # iff absent — the one-time corpus rewrite
-    bucketed_pages_path: str | None = None
     # drop tracking query params (utm_*/gclid/fbclid family,
     # functions/canonicalize.py:TRACKING_PARAM_RE) from every frontier URL
     # BEFORE keying: seeds, exploded outlinks, and the PageRank edge dsts
@@ -374,40 +338,6 @@ class CrawlJob:
         # lang/warc_ts
         cols = ["url_hash", "url", "html"] + (["text"] if config.verify_extraction else [])
         self.pages = spark.read.parquet(pages_path).select(*cols)
-        # bucketed fetch strategy: attach (or create once) the bucketed pages
-        # layout and name the per-wave scheduled table. The pages rewrite is
-        # one-time init work amortized across every wave of every run that
-        # points at the same layout — the plain-parquet analogue of an
-        # Iceberg pages table whose partition spec is bucket(N, url_hash).
-        self._pages_table: str | None = None
-        if config.fetch_strategy == "bucketed":
-            if not hasattr(self.store, "write_bucketed"):
-                raise ValueError(
-                    "fetch_strategy='bucketed' needs a store with a "
-                    "write_bucketed seam (SnapshotStore has one; implement "
-                    "the clustered write for custom stores)"
-                )
-            from bodhium_webscrapper_spark.plans.bucketed_fetch import (
-                register_bucketed,
-                write_bucketed,
-            )
-
-            self._pages_table = f"pages_bkt_{job_id}"
-            self._wave_table = f"wave_scheduled_{job_id}"
-            bpath = config.bucketed_pages_path or os.path.join(
-                checkpoint_dir, "_bucketed_pages"
-            )
-            if os.path.exists(os.path.join(bpath, "_SUCCESS")):
-                register_bucketed(spark, self._pages_table, bpath, config.fetch_buckets)
-            else:
-                write_bucketed(self.pages, self._pages_table, config.fetch_buckets, path=bpath)
-            missing = set(cols) - set(spark.table(self._pages_table).columns)
-            if missing:
-                raise ValueError(
-                    f"bucketed pages layout at {bpath} lacks columns {missing} "
-                    "this config needs (e.g. written without verify_extraction's "
-                    "text column): rewrite it or point elsewhere"
-                )
         # fused extract+canonicalize UDF: one Arrow pass yields text AND the
         # page's canonicalized, scope-filtered outlinks
         self._extract_udf = make_extract_page_outlinks_udf(
@@ -683,10 +613,9 @@ class CrawlJob:
         removed count was a full Spark job of fixed driver latency — the
         dominant per-wave cost at small wave sizes and the reason round-1
         scaling efficiency collapsed to 0.39. The wave submits exactly TWO
-        Spark jobs — the scheduled write and the page_results write — plus,
-        under the bucketed fetch strategy, one narrow third job: the
-        numeric-only (32 B/row) bucketed wave-table write, read back from
-        the scheduled artifact's footers rather than recomputed.
+        Spark jobs — the scheduled write and the page_results write. The
+        fetch join's physical form is chosen only by the scheduled
+        artifact's footer row count against ``broadcast_wave_threshold``.
         """
         cfg = self.config
         t0 = time.time()
@@ -785,45 +714,11 @@ class CrawlJob:
                 cfg.global_wave_limit,
                 takeordered_threshold=cfg.global_cap_takeordered_threshold,
             )
-        if not cfg.schedule_aqe:
-            # one action under static planning: every physical choice in
-            # this plan is already explicit (see CrawlConfig.schedule_aqe);
-            # scoped+restored so no other query inherits the setting
-            prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled")
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            self.store.write(wave, "scheduled", self._assign_order(capped, wave))
-        finally:
-            if not cfg.schedule_aqe:
-                self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        self.store.write(wave, "scheduled", self._assign_order(capped, wave))
         if probe_cache is not None:  # bloom probe cache served its one action
             probe_cache.unpersist()
         if gate_cache is not None:  # count-split cache served the write
             gate_cache.unpersist()
-        if cfg.fetch_strategy == "bucketed":
-            sc.setJobDescription(f"w{wave}:bucketed_twin")
-            # NARROW bucketed twin for the fetch side (r5): the durable
-            # ``scheduled`` artifact above is written plainly — no exchange,
-            # straight from the politeness output partitioning — and the
-            # wave TABLE the storage-partitioned join consumes is derived
-            # from it by a footer-pruned read-back of the numeric columns
-            # only (url_hash/depth/priority/wave, 32 B/row). The bucket-hash
-            # exchange + bucket sort + second write therefore move ints, not
-            # the ~100 B/row of canonical_url+host strings — the narrow-int
-            # shuffle is the shape this host (and a real cluster's network)
-            # scales best, and the strings are re-derived JVM-side from
-            # pages.url at fetch time exactly as the broadcast path does
-            # (url_hash equality implies string equality — the engine merges
-            # 64-bit collisions identically everywhere).
-            self.store.write_bucketed(
-                wave,
-                "scheduled_bkt",
-                self.store.read(self.spark, wave, "scheduled").select(
-                    "url_hash", "depth", "priority", "wave"
-                ),
-                self._wave_table,
-                cfg.fetch_buckets,
-            )
         scheduled = self.store.read(self.spark, wave, "scheduled")
         n_scheduled = self.store.row_count(wave, "scheduled")  # footer, no job
         t = mark("schedule", t)
@@ -888,36 +783,7 @@ class CrawlJob:
             extract_cols.append(
                 F.col("_page.text").eqNullSafe(F.col("text")).alias("golden_ok")
             )
-        if cfg.fetch_strategy == "bucketed":
-            # storage-partitioned: bucket b of the (narrow, numeric-only)
-            # wave table streams against bucket b of pages — no broadcast
-            # (nothing driver-serial), no exchange, no sort, at ANY wave
-            # size. canonical_url/host are re-derived JVM-side from
-            # pages.url, same as the broadcast path (url_hash equality
-            # implies the strings match — the engine merges 64-bit
-            # collisions identically everywhere), so strings never enter
-            # the wave table's bucket shuffle at all.
-            from bodhium_webscrapper_spark.plans.bucketed_fetch import (
-                bucketed_fetch_join,
-            )
-
-            joined = bucketed_fetch_join(
-                self.spark, self._pages_table, self._wave_table
-            )
-            fetch_plan = (
-                joined.withColumn(
-                    "_page", self._extract_udf(F.col("html"), F.col("url"))
-                )
-                .select(
-                    F.col("url_hash"),
-                    *derived_cols,
-                    F.col("depth"),
-                    F.col("priority"),
-                    F.col("wave"),
-                    *extract_cols,
-                )
-            )
-        elif n_scheduled <= cfg.broadcast_wave_threshold:
+        if n_scheduled <= cfg.broadcast_wave_threshold:
             attrs = F.broadcast(
                 scheduled.select("url_hash", "depth", "priority", "wave")
             )

@@ -7,7 +7,17 @@ configs (AQE, skew-join, Arrow) are what we would ship to a real cluster via
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half of this host's physical RAM: the driver JVM shares the box with
+    its Python UDF workers, and a heap larger than RAM lets the kernel
+    OOM-kill the process before Spark spills."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 2 // 2**20}m"
 
 
 def build_session(
@@ -41,7 +51,7 @@ def build_session(
         # rounds, scaling efficiency capped at ~0.6; 32m splits → 0.90)
         .config("spark.sql.files.maxPartitionBytes", "32m")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", _default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

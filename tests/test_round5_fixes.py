@@ -1,11 +1,11 @@
 """Round-5 regression tests.
 
-Covers: the bucketed storage-partitioned fetch wired into the wave loop
-(row-identical to the broadcast loop, resume re-attaches the layout),
-count_split politeness with NULL hosts (advice r4), the distributed global
-wave cap, IVF sampling without a full-corpus sort, PSL wildcard/exception
-rules, dataset-job output counting through a Hadoop-FS-safe seam, and
-streaming/batch politeness parity.
+Covers: count_split politeness with NULL hosts (advice r4), the
+distributed global wave cap, IVF sampling without a full-corpus sort, PSL
+wildcard/exception rules, dataset-job output counting through a
+Hadoop-FS-safe seam, seeds_distinct, link-authority prioritization,
+tracking-parameter stripping, canonical-link aliases, the quality-scaling
+probe's amplification, and the narrow first-wins dedup exchange.
 """
 
 from __future__ import annotations
@@ -32,66 +32,6 @@ def _run_job(spark, crawl_fixture, tmp, tag, **cfg_kwargs):
     )
     summary = job.run()
     return job, summary
-
-
-# ---------------------------------------------------------------- bucketed loop
-def test_bucketed_loop_identical_to_broadcast(spark, crawl_fixture, tmp_path):
-    """fetch_strategy='bucketed' must change ONLY the physical plan: crawl
-    order, page_results rows, and the seen set are bit-identical to the
-    default broadcast loop on the same input."""
-    tmp = str(tmp_path)
-    jb, sb = _run_job(spark, crawl_fixture, tmp, "r5_bcast")
-    jk, sk = _run_job(
-        spark, crawl_fixture, tmp, "r5_bkt",
-        fetch_strategy="bucketed", fetch_buckets=8,
-    )
-    assert sb["total_scheduled"] == sk["total_scheduled"] > 0
-    order_b = [tuple(r) for r in jb.crawl_order().collect()]
-    order_k = [tuple(r) for r in jk.crawl_order().collect()]
-    assert order_b == order_k
-    res_b = jb.extracted().select("url_hash", "canonical_url", "wave", "text")
-    res_k = jk.extracted().select("url_hash", "canonical_url", "wave", "text")
-    assert res_b.count() == res_k.count() > 0
-    assert res_b.exceptAll(res_k).isEmpty()
-    assert res_k.exceptAll(res_b).isEmpty()
-    assert jb.seen_set().select("url_hash").exceptAll(
-        jk.seen_set().select("url_hash")
-    ).isEmpty()
-    for t in ("pages_bkt_r5_bkt", "wave_scheduled_r5_bkt"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_bucketed_loop_resume_reattaches_layout(spark, crawl_fixture, tmp_path):
-    """A resumed bucketed run re-attaches the existing _bucketed_pages layout
-    (register_bucketed, metadata only) instead of rewriting it, and replays
-    the identical remaining order."""
-    tmp = str(tmp_path)
-    jf, sf = _run_job(
-        spark, crawl_fixture, tmp, "r5_full",
-        fetch_strategy="bucketed", fetch_buckets=8,
-    )
-    full_order = [tuple(r) for r in jf.crawl_order().collect()]
-
-    # fresh run, killed after wave 1 (max_waves=2), then resumed to 3
-    ck = os.path.join(tmp, "r5_resume")
-    seeds = spark.read.parquet(crawl_fixture["seeds_full"])
-    robots = spark.read.parquet(crawl_fixture["robots"])
-    cfg2 = CrawlConfig(max_waves=2, fetch_strategy="bucketed", fetch_buckets=8)
-    CrawlJob(spark, crawl_fixture["pages"], seeds, robots, cfg2, ck,
-             job_id="r5_resume").run()
-    bpath = os.path.join(ck, "_bucketed_pages")
-    assert os.path.exists(os.path.join(bpath, "_SUCCESS"))
-    mtime = os.path.getmtime(os.path.join(bpath, "_SUCCESS"))
-    cfg3 = CrawlConfig(max_waves=3, fetch_strategy="bucketed", fetch_buckets=8)
-    jr = CrawlJob(spark, crawl_fixture["pages"], seeds, robots, cfg3, ck,
-                  job_id="r5_resume")
-    jr.run(resume=True)
-    # layout untouched => re-attach, not rewrite
-    assert os.path.getmtime(os.path.join(bpath, "_SUCCESS")) == mtime
-    assert [tuple(r) for r in jr.crawl_order().collect()] == full_order
-    for t in ("pages_bkt_r5_full", "wave_scheduled_r5_full",
-              "pages_bkt_r5_resume", "wave_scheduled_r5_resume"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 # ------------------------------------------------- count_split NULL-host (r4 advice)
@@ -307,47 +247,6 @@ def test_seeds_distinct_identical_on_distinct_seeds(spark, crawl_fixture, tmp_pa
     ).isEmpty()
 
 
-def test_write_bucketed_relative_path_lands_in_cwd(spark, tmp_path):
-    """A RELATIVE table location must resolve against the process cwd (like
-    every other artifact path), not silently under spark-warehouse/."""
-    from bodhium_webscrapper_spark.plans.bucketed_fetch import write_bucketed
-
-    rel = os.path.relpath(str(tmp_path / "bkt_rel"))
-    df = spark.range(10).selectExpr("id as url_hash")
-    write_bucketed(df, "rel_bkt_t", 2, rel)
-    try:
-        assert os.path.exists(os.path.join(rel, "_SUCCESS"))
-        assert not os.path.exists(os.path.join("spark-warehouse", rel))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS rel_bkt_t")
-
-
-# ------------------------------------------- narrow wave table (r5, late)
-def test_bucketed_wave_table_is_numeric_only(spark, crawl_fixture, tmp_path):
-    """The bucketed strategy's wave TABLE must carry only the numeric fetch
-    attributes (url_hash/depth/priority/wave): the scheduled artifact keeps
-    the full schema (pending/crawl_order contracts), while the bucket
-    exchange + sort + fetch scan never see the URL/host strings."""
-    tmp = str(tmp_path)
-    jk, sk = _run_job(
-        spark, crawl_fixture, tmp, "r5_narrow",
-        fetch_strategy="bucketed", fetch_buckets=8,
-    )
-    try:
-        wave_cols = set(spark.table("wave_scheduled_r5_narrow").columns)
-        assert wave_cols == {"url_hash", "depth", "priority", "wave"}
-        # durable artifact keeps the full frontier schema
-        sched = jk.store.read(spark, 0, "scheduled")
-        assert {"url_hash", "canonical_url", "host", "depth", "priority"} <= set(
-            sched.columns
-        )
-        # and the fetch output still carries the re-derived URL string
-        assert "canonical_url" in jk.extracted().columns
-    finally:
-        for t in ("pages_bkt_r5_narrow", "wave_scheduled_r5_narrow"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_count_split_aggregates_on_host_hash(spark):
     """count_split's over-budget detection must key its aggregation on
     xxhash64(host), not the host string — the count shuffle and broadcast
@@ -368,46 +267,6 @@ def test_count_split_aggregates_on_host_hash(spark):
     # string-keyed semi/anti joins let NULLs bypass the budget entirely)
     assert out.count() == 7 * 5 + 5
     assert out.filter(F.col("host").isNull()).count() == 5
-
-
-# ------------------------------------- clean-window record surfacing (r5)
-def test_best_clean_window_record_filters_dirty_probes(tmp_path, monkeypatch):
-    """bench.best_clean_window_record must ignore giant pairs whose
-    bracketing host probes were BOTH dirty (<0.93 parity) and pick the
-    highest clean-probe efficiency, so a dirty per-round bench window can
-    never erase the recorded clean measurement from the artifact."""
-    import json as _json
-
-    import bench as _bench
-
-    recs = [
-        {"ts": "t0", "host_before": {"parity": 0.7}, "host_after": {"parity": 0.71},
-         "giant": {"eff": 0.99, "local[4]": {"seconds": 1, "urls_per_sec": 1},
-                   "local[16]": {"seconds": 1, "urls_per_sec": 1}}},
-        {"ts": "t1", "host_before": {"parity": 0.7}, "host_after": {"parity": 0.95},
-         "sixwave": {"eff": 0.6, "steady_state_eff": 0.7},
-         "giant": {"eff": 0.81, "local[4]": {"seconds": 240.0, "urls_per_sec": 9e4},
-                   "local[16]": {"seconds": 74.0, "urls_per_sec": 3e5}}},
-        {"ts": "t2", "control": {"eff": 0.6}},  # hunt skip rows parse fine
-    ]
-    bench_dir = tmp_path / "BENCH"
-    bench_dir.mkdir()
-    with open(bench_dir / "window_hunt.jsonl", "w") as f:
-        f.write("not json\n")
-        for r in recs:
-            f.write(_json.dumps(r) + "\n")
-    monkeypatch.setattr(
-        _bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
-    )
-    best = _bench.best_clean_window_record()
-    assert best["giant_eff"] == 0.81 and best["ts"] == "t1"
-    assert best["clean_probe_parity"] == 0.95
-    assert best["sixwave_steady_state_eff"] == 0.7
-    # no file at all -> empty dict, never raises
-    monkeypatch.setattr(
-        _bench.os.path, "abspath", lambda p: str(tmp_path / "nowhere" / "bench.py")
-    )
-    assert _bench.best_clean_window_record() == {}
 
 
 # ---------------------------------------------------------------- pagerank priority
@@ -719,22 +578,3 @@ def test_dedup_narrow_exchange_row_identical(spark):
     got = dedup_first_wins_frontier(base)
     assert got.columns == base.columns
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, legacy.collect()))
-
-
-def test_schedule_static_planning_identical(spark, crawl_fixture, tmp_path):
-    """schedule_aqe=False (static planning for the schedule action) must be
-    a pure physical-plan choice: crawl order and extracted rows identical
-    to the default AQE loop, and the session's AQE conf restored after."""
-    tmp = str(tmp_path)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    ja, sa = _run_job(spark, crawl_fixture, tmp, "r5_aqe")
-    js, ss = _run_job(spark, crawl_fixture, tmp, "r5_static", schedule_aqe=False)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert sa["total_scheduled"] == ss["total_scheduled"] > 0
-    assert [tuple(r) for r in ja.crawl_order().collect()] == [
-        tuple(r) for r in js.crawl_order().collect()
-    ]
-    res_a = ja.extracted().select("url_hash", "canonical_url", "wave", "text")
-    res_s = js.extracted().select("url_hash", "canonical_url", "wave", "text")
-    assert res_a.exceptAll(res_s).isEmpty()
-    assert res_s.exceptAll(res_a).isEmpty()
