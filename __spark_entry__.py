@@ -4552,15 +4552,17 @@ _MIME_CASES = [
      '<?xml version="1.0"?><html xmlns="http://www.w3.org/1999/xhtml">'),
     ("video/mp4", "ftyp mp4 data"),
     ("", "random bytes no magic"),
+    ("text/plain", "[DRAFT] notes"),  # weak JSON sniff: the header stands
 ]
 
 
 def _mime_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic header/body corpus keyed off documents: the 12
+    """Deterministic header/body corpus keyed off documents: the 13
     _MIME_CASES cover the lying text/html-serving-a-PDF header, a missing
     header filled by markup sniff, case/space/quote variants of the
-    charset parameter, a texty XML sniff under an xhtml declaration, and
-    the no-header-no-magic octet-stream default."""
+    charset parameter, a texty XML sniff under an xhtml declaration, a
+    text/plain body that merely starts with ``[`` (the weak JSON sniff),
+    and the no-header-no-magic octet-stream default."""
     docs = _t(spark, sf_dir, "documents")
     idx = docs.select(
         (F.col("doc_id") % len(_MIME_CASES)).cast("int").alias("i")
@@ -4648,7 +4650,8 @@ _Q_MIME_SQL_TEMPLATE = r"""
       SELECT i, mime, charset, sniffed,
         CASE
           WHEN sniffed IS NOT NULL
-               AND sniffed NOT IN ('text/html', 'text/xml') THEN sniffed
+               AND sniffed NOT IN ('text/html', 'text/xml', 'application/json')
+            THEN sniffed
           WHEN mime <> '' THEN mime
           WHEN sniffed IS NOT NULL THEN sniffed
           ELSE 'application/octet-stream' END AS effective
@@ -4846,7 +4849,8 @@ def q_revalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTTP conditional-revalidation classification (operators/diff.py
     revalidation_classes): previous crawl's validators vs the refetch's
     headers → not_modified / changed / new / gone per RFC 9110 §8.8
-    precedence (strong ETag beats weak Last-Modified beats content hash).
+    precedence (ETag, weakly compared, beats Last-Modified beats content
+    hash).
     One full-outer equi-join, JVM string equalities, no UDF — the gate
     that lets a 10^10-URL recrawl skip re-extraction of unchanged pages."""
     from bodhium_webscrapper_spark.operators.diff import revalidation_classes
@@ -4888,7 +4892,8 @@ _Q_REVAL_SQL = r"""
         WHEN NOT in_p THEN 'new'
         WHEN NOT in_c THEN 'gone'
         WHEN (CASE
-                WHEN pe IS NOT NULL AND ce IS NOT NULL THEN pe = ce
+                WHEN pe IS NOT NULL AND ce IS NOT NULL
+                  THEN regexp_replace(pe, '^W/', '') = regexp_replace(ce, '^W/', '')
                 WHEN pl IS NOT NULL AND cl IS NOT NULL THEN pl = cl
                 ELSE ph IS NOT DISTINCT FROM ch END)
           THEN 'not_modified'

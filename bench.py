@@ -259,7 +259,6 @@ def _run_frontier_inproc(master: str, fixture: dict, tag: str) -> dict:
         global_wave_limit=None,
         salt_buckets=16,
         seen_broadcast_threshold=0,
-        use_bloom=False,
         # fused-broadcast fetch up to this wave size. The engine default
         # (4M rows ≈ 128 MB) is sized for 4-8 GB cluster executors; this
         # sandbox's single 48 GB JVM comfortably holds a 10^7-row (~320 MB)

@@ -26,8 +26,10 @@ from pyspark.sql import functions as F
 # the html-ish family the extractor accepts; anything else is media/drop
 TEXT_MIMES = ("text/html", "application/xhtml+xml", "text/plain", "text/xml")
 # sniffed kinds compatible with a text-family declaration (markup magic
-# does not contradict a text/html header; %PDF does)
-_TEXTY_SNIFFS = ("text/html", "text/xml")
+# does not contradict a text/html header; %PDF does). The JSON sniff is
+# weak: a leading ``{``/``[`` is as likely prose ("[DRAFT] notes") as a
+# JSON value, so it only fills in for a missing header.
+_TEXTY_SNIFFS = ("text/html", "text/xml", "application/json")
 
 _CHARSET_PARAM_RE = r"""(?i)charset\s*=\s*["']?\s*([A-Za-z0-9_.:\-]+)"""
 
@@ -78,7 +80,8 @@ def effective_mime(header: Column, body: Column) -> Column:
     """The type the pipeline acts on, WHATWG-precedence: a sniffed
     NON-texty magic overrides whatever the header claims (the lying
     ``text/html``-serving-a-PDF case); otherwise the declared type; a
-    texty sniff fills in for a missing header; with neither, the RFC 9110
+    texty sniff (markup, XML prolog, or a JSON-looking ``{``/``[`` start)
+    fills in for a missing header; with neither, the RFC 9110
     default ``application/octet-stream``."""
     declared = content_type_mime(header)
     sniffed = sniff_mime(body)

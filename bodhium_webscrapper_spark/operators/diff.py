@@ -130,6 +130,14 @@ def revalidation_classes(
     Per RFC 9110 §8.8: the ETag is the strong validator and wins when both
     sides carry one; Last-Modified is the weak fallback when either ETag
     is absent; with no validators at all the stored content hash decides.
+    ETags use the weak comparison of RFC 9110 §8.8.3.2 (the one
+    ``If-None-Match`` revalidation uses): a leading ``W/`` is ignored, so
+    ``W/"abc"`` matches ``"abc"``.
+
+    Precondition: ``url_col`` is unique within ``prev`` and within
+    ``curr``. A duplicated url fans the join out to one row per pair;
+    dedup each side first (e.g. the latest fetch per url).
+
     Returns ``(url, status)`` with status in
 
       - ``'not_modified'`` — validators (or hashes) match: skip extract,
@@ -160,8 +168,12 @@ def revalidation_classes(
     j = p.join(c, "url", "full_outer")
     both_etags = F.col("_pe").isNotNull() & F.col("_ce").isNotNull()
     both_lm = F.col("_pl").isNotNull() & F.col("_cl").isNotNull()
+
+    def opaque(etag: str):  # weak comparison: drop the W/ prefix
+        return F.regexp_replace(F.col(etag), "^W/", "")
+
     matched = (
-        F.when(both_etags, F.col("_pe") == F.col("_ce"))
+        F.when(both_etags, opaque("_pe") == opaque("_ce"))
         .when(both_lm, F.col("_pl") == F.col("_cl"))
         .otherwise(F.col("_ph").eqNullSafe(F.col("_ch")))
     )

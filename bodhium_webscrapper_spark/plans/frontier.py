@@ -14,7 +14,7 @@ parquet footers and the next frontier is DERIVED, not materialized:
   frontier_t = explode(page_results_{t-1}.outlinks) ∪ pending misses
                (lazy plan over committed artifacts; wave 0: seeds)
   candidates = dedup(frontier_t)   first-wins per url_hash         [A1]
-  new        = candidates ANTI-JOIN seen (bloom pre-pass + exact)  [J2]
+  new        = candidates ANTI-JOIN seen (exact, on url_hash)      [J2]
   gated      = robots_gate(new)                                    [U5]
   scheduled  = per-host top-budget window, host-hash salted        [W1/W3]
                → global wave cap, ordered (priority desc, url_hash)[W2]
@@ -40,7 +40,10 @@ Scale notes (100 TB / 10^10 URLs):
   broadcast-hash-join probe of pages. On Iceberg, pages would be bucketed by
   ``bucket(N, url_hash)`` making this storage-partitioned even for giant
   waves.
-- the seen anti-join sees only bloom positives (vectorized pre-filter).
+- the seen anti-join broadcasts seen while it is small; past
+  ``seen_broadcast_threshold`` it is a sort-merge anti-join that reuses the
+  first-wins dedup window's ``hashpartitioning(url_hash)`` Exchange, so only
+  seen's url_hash column crosses a shuffle.
 - the politeness window is salted two-phase top-k → no mega-host straggler.
 - state (seen/frontier) is read back from the snapshot each wave, keeping
   every wave's plan O(1) and lineage flat (no iterative plan blow-up).
@@ -51,6 +54,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -64,7 +68,6 @@ from bodhium_webscrapper_spark.operators.politeness import (
     with_crawl_delay_budget,
 )
 from bodhium_webscrapper_spark.operators.robots import robots_gate
-from bodhium_webscrapper_spark.operators.seen import seen_anti_join_cached
 from bodhium_webscrapper_spark.plans.checkpoint import CHECKPOINT_FORMAT, SnapshotStore
 from bodhium_webscrapper_spark.plans.metrics import lineage_rows_table
 
@@ -122,9 +125,9 @@ class CrawlConfig:
     # table cannot be a broadcast build) — same pattern as
     # broadcast_wave_threshold below
     robots_broadcast_threshold: int = 1_000_000
-    use_bloom: bool = True
-    bloom_buckets: int = 64
-    bloom_capacity: int = 4_000_000  # fixed-width blobs -> OR-mergeable deltas
+    # the wave loop has no bloom pre-filter; a class constant (not a
+    # field, so not settable) kept for readers that still branch on it
+    use_bloom: ClassVar[bool] = False
     # fetch-join broadcast cutover: up to this wave size the scheduled
     # wave broadcasts WITH its numeric attributes (url_hash, depth,
     # priority, wave — 32 B/row, so 4M rows ≈ 128 MB, sized for a standard
@@ -134,7 +137,9 @@ class CrawlConfig:
     # (the broadcast build is driver-serial fixed cost, the shuffle scales
     # with cores). pages never shuffle on either path.
     broadcast_wave_threshold: int = 4_000_000
-    seen_broadcast_threshold: int = 4_000_000  # below: broadcast anti-join, no bloom
+    # seen anti-join: at or below this many seen keys, broadcast seen;
+    # above it, a sort-merge anti-join on the dedup window's url_hash Exchange
+    seen_broadcast_threshold: int = 4_000_000
     # build the pending-retry artifact driver-side (pyarrow column reads +
     # numpy set difference) while the wave's scheduled set fits comfortably
     # in driver memory; above it, one extra small Spark anti-join job per
@@ -598,7 +603,6 @@ class CrawlJob:
         wave: int,
         frontier: DataFrame,
         seen: DataFrame,
-        bloom: "object | None",
         n_candidates: int | None = None,
     ) -> WaveStats:
         """Each heavy plan is written straight to the wave snapshot and read
@@ -642,9 +646,10 @@ class CrawlJob:
 
         # schedule: dedup -> seen anti-join -> robots -> per-host budget ->
         # global cap. Adaptive physical choices (all semantics-preserving):
-        # - seen small enough to broadcast -> broadcast-hash anti-join and
-        #   skip the bloom pre-pass (the broadcast probe IS the filter);
-        #   at 10^10 seen keys: bloom pre-pass + shuffle anti-join.
+        # - seen small enough to broadcast -> broadcast-hash anti-join;
+        #   at 10^10 seen keys: sort-merge anti-join whose frontier side is
+        #   already hash-partitioned on url_hash by the dedup window, so
+        #   only seen's url_hash column is shuffled.
         # - host-hash salting only kicks in above an activation threshold —
         #   below it, per-host partitions are small enough that the second
         #   window pass would be pure overhead.
@@ -654,13 +659,10 @@ class CrawlJob:
             deduped = frontier
         else:
             deduped = self._dedup_first_wins(frontier)
-        probe_cache = None
+        seen_keys = seen.select("url_hash")
         if self._total_seen <= cfg.seen_broadcast_threshold:
-            new = deduped.join(
-                F.broadcast(seen.select("url_hash")), "url_hash", "left_anti"
-            )
-        else:
-            new, probe_cache = seen_anti_join_cached(deduped, seen, "url_hash", bloom)
+            seen_keys = F.broadcast(seen_keys)
+        new = deduped.join(seen_keys, "url_hash", "left_anti")
         gated = (
             robots_gate(new, self._rules, flat=True, strategy=self._robots_strategy)
             if self._rules is not None
@@ -715,8 +717,6 @@ class CrawlJob:
                 takeordered_threshold=cfg.global_cap_takeordered_threshold,
             )
         self.store.write(wave, "scheduled", self._assign_order(capped, wave))
-        if probe_cache is not None:  # bloom probe cache served its one action
-            probe_cache.unpersist()
         if gate_cache is not None:  # count-split cache served the write
             gate_cache.unpersist()
         scheduled = self.store.read(self.spark, wave, "scheduled")
@@ -964,23 +964,10 @@ class CrawlJob:
                 self._finalize_err = None
                 raise err
 
-    def _materialize_bloom(self, bloom, wave: int) -> None:
-        """Write the merged blob table and re-read it: executor-side state,
-        flat lineage, resumable. Blob bytes never transit the driver."""
-        self.store.write(wave, "bloom", bloom.blobs)
-        bloom.blobs = self.store.read(self.spark, wave, "bloom")
-
     def run(self, resume: bool = False) -> dict:
         """Run (or resume) the wave loop; returns a summary dict."""
-        from bodhium_webscrapper_spark.operators.seen import DistributedBloom
-
         cfg = self.config
         committed = self.store.committed_wave()
-        bloom = (
-            DistributedBloom(self.spark, cfg.bloom_buckets, cfg.bloom_capacity)
-            if cfg.use_bloom
-            else None
-        )
         n_frontier: int | None = None  # derived count; None = seeds wave
         self._resumed_at = committed + 1 if (resume and committed >= 0) else -1
         # seeds-wave marker: wave 0 of a fresh run is the only wave whose
@@ -1033,7 +1020,6 @@ class CrawlJob:
         total_candidates = 0
         waves_run = []
         loop_overhead: list[float] = []
-        bloom_hydrated_upto = -1
         t_tail = time.time()
         for wave in range(start, cfg.max_waves):
             loop_overhead.append(round(time.time() - t_tail, 3))
@@ -1048,21 +1034,7 @@ class CrawlJob:
                 n_frontier = frontier.count()
             if n_frontier == 0:
                 break
-            state = None
-            if bloom is not None and self._total_seen > cfg.seen_broadcast_threshold:
-                # bloom only earns its keep once seen outgrows the broadcast
-                # anti-join; hydrate lazily — from the last committed bloom
-                # artifact when one exists (resume), else one O(seen) build —
-                # then incremental O(delta) afterwards
-                if bloom_hydrated_upto < wave - 1 and wave > 0:
-                    if self.store.has_artifact(wave - 1, "bloom"):
-                        bloom.blobs = self.store.read(self.spark, wave - 1, "bloom")
-                    else:
-                        bloom.add_delta(self._seen_upto(wave - 1))
-                        self._materialize_bloom(bloom, wave - 1)
-                bloom_hydrated_upto = wave - 1
-                state = bloom.state()
-            stats = self._run_wave(wave, frontier, seen, state, n_candidates=n_frontier)
+            stats = self._run_wave(wave, frontier, seen, n_candidates=n_frontier)
             if seed_cache is not None:  # seeds wave committed; cache served
                 seed_cache.unpersist()  # its count + schedule actions
                 seed_cache = None
@@ -1071,8 +1043,7 @@ class CrawlJob:
             total_scheduled += stats.scheduled
             total_candidates += stats.candidates
             self._total_seen = total_scheduled
-            # re-read state from the snapshot: flat lineage, O(1) plans;
-            # bloom absorbs only the new delta (O(wave), not O(seen))
+            # re-read state from the snapshot: flat lineage, O(1) plans
             if cfg.compact_seen_every and (wave + 1) % cfg.compact_seen_every == 0:
                 # compaction rewrites the scheduled delta dirs the in-flight
                 # finalize thread is reading footers from — settle it first
@@ -1081,24 +1052,6 @@ class CrawlJob:
             frontier = self._frontier_after(wave)
             n_frontier = stats.next_candidates
             seen = self._seen_upto(wave)
-            # incremental bloom maintenance ONLY while the bloom regime is
-            # active (seen too big to broadcast) — in the broadcast regime
-            # the bloom is never probed, and building/merging/writing blobs
-            # there would re-add fixed per-wave jobs for nothing; if the
-            # regime activates later, the lazy-hydration branch above
-            # catches up from the last artifact or one O(seen) build
-            if (
-                bloom is not None
-                and self._total_seen > cfg.seen_broadcast_threshold
-                and bloom_hydrated_upto == wave - 1
-            ):
-                bloom.add_delta(
-                    self.store.read(self.spark, wave, "scheduled").select("url_hash")
-                )
-                # materialize the merged blob table (small: n_buckets rows)
-                # so lineage stays flat and resume rehydrates in O(1)
-                self._materialize_bloom(bloom, wave)
-                bloom_hydrated_upto = wave
 
         if seed_cache is not None:  # empty-seeds break before wave 0 ran
             seed_cache.unpersist()

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from bodhium_webscrapper_spark.plans.frontier import CrawlConfig, CrawlJob
 
 
-def _mk_job(spark, crawl_fixture, tmp_path, name, **cfg_kwargs):
+def _mk_job(spark, crawl_fixture, tmp_path, name, store=None, **cfg_kwargs):
     seeds = spark.read.parquet(crawl_fixture["seeds"])
     robots = spark.read.parquet(crawl_fixture["robots"])
     defaults = dict(
@@ -25,6 +25,7 @@ def _mk_job(spark, crawl_fixture, tmp_path, name, **cfg_kwargs):
         robots,
         cfg,
         os.path.join(str(tmp_path), name),
+        store=store,
     )
 
 
@@ -130,19 +131,6 @@ def test_resume_determinism(spark, crawl_fixture, tmp_path):
     assert a == b
 
 
-def test_bloom_off_identical(spark, crawl_fixture, tmp_path):
-    # threshold 0 forces the bloom + shuffle anti-join path (the 10^10
-    # regime); default config would take the broadcast path at test scale
-    on = _mk_job(
-        spark, crawl_fixture, tmp_path, "bon",
-        use_bloom=True, seen_broadcast_threshold=0,
-    )
-    on.run()
-    off = _mk_job(spark, crawl_fixture, tmp_path, "boff", use_bloom=False)
-    off.run()
-    assert _order_tuples(on) == _order_tuples(off)
-
-
 def test_crash_mid_wave_resume(spark, crawl_fixture, tmp_path):
     """A crash AFTER wave files are written but BEFORE the manifest commit
     must leave the store resumable: the partial wave dir is ignored,
@@ -240,47 +228,113 @@ def test_lineage_events(spark, crawl_fixture, tmp_path):
     assert int(row["details"]["scheduled"]) > 0
 
 
-def test_bloom_resume_rehydrates_from_artifact(spark, crawl_fixture, tmp_path):
-    """Resume in the bloom regime must rehydrate the blob table from the
-    last committed wave's bloom artifact (O(1) read, no full-seen rebuild)
-    and still replay the identical crawl order."""
-    import os as _os
-
+def test_shuffle_seen_resume_identical(spark, crawl_fixture, tmp_path):
+    """Resume in the shuffle anti-join regime (seen never broadcast)
+    replays the uninterrupted crawl order, and the wave loop keeps no
+    seen-side state of its own: no ``bloom`` artifact is ever written."""
     full = _mk_job(
-        spark, crawl_fixture, tmp_path, "bfull",
-        use_bloom=True, seen_broadcast_threshold=0,
+        spark, crawl_fixture, tmp_path, "sfull", seen_broadcast_threshold=0
     )
     full.run()
 
     partial = _mk_job(
-        spark, crawl_fixture, tmp_path, "bpart",
-        use_bloom=True, seen_broadcast_threshold=0, max_waves=2,
+        spark, crawl_fixture, tmp_path, "spart",
+        seen_broadcast_threshold=0, max_waves=2,
     )
     partial.run()
-    # the partial run materialized a bloom artifact for its last wave
-    assert _os.path.exists(partial.store.wave_dir(1, "bloom"))
-
     resumed = _mk_job(
-        spark, crawl_fixture, tmp_path, "bpart",
-        use_bloom=True, seen_broadcast_threshold=0,
+        spark, crawl_fixture, tmp_path, "spart", seen_broadcast_threshold=0
     )
     resumed.run(resume=True)
+    assert resumed.store.committed_wave() == full.store.committed_wave() >= 2
     assert _order_tuples(resumed) == _order_tuples(full)
+    for job in (full, resumed):
+        for wave in range(job.store.committed_wave() + 1):
+            assert not os.path.exists(job.store.wave_dir(wave, "bloom"))
+
+
+def _child(plan, i=0):
+    return plan.children().apply(i)
+
+
+def _first_node(plan, names):
+    """Depth-first search of a JVM SparkPlan for a node named in ``names``."""
+    if plan.nodeName() in names:
+        return plan
+    for i in range(plan.children().size()):
+        hit = _first_node(_child(plan, i), names)
+        if hit is not None:
+            return hit
+    return None
+
+
+def test_shuffle_seen_reuses_dedup_exchange(spark, crawl_fixture, tmp_path):
+    """Above ``seen_broadcast_threshold`` with auto-broadcast off, the seen
+    anti-join is a SortMergeJoin LeftAnti whose frontier side is fed by the
+    first-wins dedup window's url_hash Exchange (no Exchange of its own),
+    with no Python node anywhere in the schedule plan, and the crawl order
+    equals the default (broadcast) run's."""
+    from bodhium_webscrapper_spark.plans.checkpoint import SnapshotStore
+
+    class PlanCapture(SnapshotStore):
+        def __init__(self, root):
+            super().__init__(root)
+            self.plans = {}
+
+        def write(self, wave, name, df):
+            if name == "scheduled" and wave >= 1:
+                plan = df._jdf.queryExecution().executedPlan()
+                if plan.nodeName() == "AdaptiveSparkPlan":
+                    plan = plan.executedPlan()  # initial physical plan
+                self.plans[wave] = plan
+            return super().write(wave, name, df)
+
+    base = _mk_job(spark, crawl_fixture, tmp_path, "smj_base")
+    base.run()
+    conf_key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf_key)
+    spark.conf.set(conf_key, "-1")
+    try:
+        store = PlanCapture(os.path.join(str(tmp_path), "smj"))
+        job = _mk_job(
+            spark, crawl_fixture, tmp_path, "smj",
+            store=store, seen_broadcast_threshold=0,
+        )
+        job.run()
+    finally:
+        spark.conf.set(conf_key, old)
+
+    assert store.plans, "no wave >= 1 scheduled plan captured"
+    for wave, plan in store.plans.items():
+        text = plan.toString()
+        for python_node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython",
+                            "BatchEvalPython", "FlatMapGroupsInPandas"):
+            assert python_node not in text, (wave, python_node)
+        smj = _first_node(plan, {"SortMergeJoin"})
+        assert smj is not None, (wave, text)
+        assert smj.joinType().toString() == "LeftAnti", (wave, text)
+        # frontier side: the first Exchange or Window below the join must
+        # be the dedup Window, i.e. the join reuses the window's Exchange
+        left = _first_node(_child(smj, 0), {"Exchange", "Window"})
+        assert left.nodeName() == "Window", (wave, text)
+        # seen side: shuffled onto the same url_hash partitioning
+        right = _first_node(_child(smj, 1), {"Exchange"})
+        assert right is not None and "url_hash" in right.toString(), (wave, text)
+    assert _order_tuples(job) == _order_tuples(base)
 
 
 def test_physical_knobs_preserve_order(spark, crawl_fixture, tmp_path):
     """Every adaptive physical choice in the wave loop (host-hash salting,
-    attr-join broadcast vs shuffle, bloom pre-filter, broadcast vs shuffle
-    anti-join) is an optimization, not a semantics change: the crawl order
-    must be bit-identical under all of them."""
+    attr-join broadcast vs shuffle, broadcast vs shuffle seen anti-join,
+    broadcast vs shuffle robots gate) is an optimization, not a semantics
+    change: the crawl order must be bit-identical under all of them."""
     base = _mk_job(spark, crawl_fixture, tmp_path, "k_base")
     base.run()
     expected = _order_tuples(base)
     variants = {
         "k_salt": dict(salt_activation_threshold=0, salt_buckets=8),
         "k_shuffle_attrs": dict(broadcast_wave_threshold=0),
-        "k_shuffle_seen": dict(seen_broadcast_threshold=0, use_bloom=False),
-        "k_bloom": dict(seen_broadcast_threshold=0, use_bloom=True),
+        "k_shuffle_seen": dict(seen_broadcast_threshold=0),
         "k_shuffle_robots": dict(robots_broadcast_threshold=0),
     }
     for name, knobs in variants.items():

@@ -54,6 +54,18 @@ def test_mime_octet_stream_default(spark):
     assert r.eff == "application/octet-stream" and r.keep is False
 
 
+def test_mime_json_sniff_is_weak(spark):
+    """A leading ``[``/``{`` sniffs as JSON but does not override a declared
+    text type; it only fills in for a missing header."""
+    r = _one(spark, "text/plain", "[DRAFT] notes")
+    assert r.sniffed == "application/json"
+    assert r.eff == "text/plain" and r.keep is True
+    r = _one(spark, "text/html", '{"not": "really html"}')
+    assert r.eff == "text/html" and r.keep is True
+    r = _one(spark, None, '  {"a": 1}')
+    assert r.eff == "application/json" and r.keep is False
+
+
 def test_mime_charset_quote_and_space_variants(spark):
     r = _one(spark, 'TEXT/HTML ; charset = "ISO-8859-1"', "<html>")
     assert r.mime == "text/html" and r.charset == "iso-8859-1"

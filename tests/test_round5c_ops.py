@@ -51,8 +51,14 @@ def test_compaction_plan_groups_bounded_and_partition_invariant(spark):
 
 
 def test_compaction_plan_rejects_bad_target(spark):
-    with pytest.raises(ValueError):
-        compaction_plan(_files(spark, [1]), "file_id", "bytes", target_bytes=0)
+    # fails fast: no prefix-sum shuffle, persist or collect is submitted
+    files = _files(spark, [100, 150, 200])
+    tracker = spark.sparkContext.statusTracker()
+    before = sorted(tracker.getJobIdsForGroup())
+    for bad in (0, -1):
+        with pytest.raises(ValueError):
+            compaction_plan(files, "file_id", "bytes", target_bytes=bad)
+    assert sorted(tracker.getJobIdsForGroup()) == before
 
 
 def test_shard_boundaries_exact_order_statistics(spark):
@@ -95,6 +101,7 @@ def test_revalidation_classes_all_branches(spark):
             ("u7", 'W/"g"', None, "h7"),    # gone (prev only)
             # prev has etag, curr doesn't -> weak fallback decides
             ("u9", 'W/"z"', "Mon", "h9"),
+            ("u10", 'W/"abc"', "Mon", "h10"),  # weak vs strong, same tag
         ],
         "url string, etag string, last_modified string, content_hash string",
     )
@@ -108,6 +115,7 @@ def test_revalidation_classes_all_branches(spark):
             ("u6", None, None, "HX"),
             ("u8", 'W/"n"', "Mon", "h8"),   # new (curr only)
             ("u9", None, "Mon", "h9x"),
+            ("u10", '"abc"', "Tue", "h10x"),  # W/ ignored -> not_modified
         ],
         "url string, etag string, last_modified string, content_hash string",
     )
@@ -122,6 +130,7 @@ def test_revalidation_classes_all_branches(spark):
         "u7": "gone",
         "u8": "new",
         "u9": "not_modified",
+        "u10": "not_modified",
     }
 
 
